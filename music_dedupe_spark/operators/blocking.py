@@ -64,6 +64,23 @@ def _pairs_within(blocks: DataFrame, key_cols: list[str], channel: str) -> DataF
     )
 
 
+def _min_star(blocks: DataFrame, key_col: str, channel: str) -> DataFrame:
+    """Star edges from every row to the minimum file_id of its block —
+    linear in block size, the connectivity-preserving bound on hot
+    blocks."""
+    roots = blocks.groupBy(key_col).agg(F.min("file_id").alias("_root"))
+    return (
+        blocks.select(key_col, "file_id")
+        .join(roots, key_col)
+        .filter(F.col("file_id") != F.col("_root"))
+        .select(
+            F.least("file_id", "_root").alias("left_id"),
+            F.greatest("file_id", "_root").alias("right_id"),
+        )
+        .withColumn("channel", F.lit(channel))
+    )
+
+
 def exact_key_pairs(
     df: DataFrame,
     key_col: str = "norm_name",
@@ -74,48 +91,29 @@ def exact_key_pairs(
 
     Blocks <= cap: all pairs. Blocks > cap: pairs within hash-salted
     sub-blocks of ~cap rows + a star to the block minimum (connectivity).
-    The salt is ``pmod(xxhash64(file_id), n_sub)`` — deterministic,
-    uniform, independent of row order.
+    The salt is ``pmod(xxhash64(file_id), n_sub)`` for big blocks and 0
+    for small ones — deterministic, uniform, independent of row order —
+    so ONE self-join on (key, salt) pairs both kinds of block.
     """
     keyed = df.select(F.col(key_col).alias("_bk"), "file_id").filter(
         F.col(key_col).isNotNull() & (F.col(key_col) != "")
     )
-    keyed = _attach_block_size(keyed)
-
-    small = keyed.filter(F.col("_bs") <= cap)
-    small_pairs = _pairs_within(small, ["_bk"], channel)
-
-    big = keyed.filter(F.col("_bs") > cap).withColumn(
-        "_salt", F.pmod(F.xxhash64("file_id"), F.ceil(F.col("_bs") / cap).cast("int"))
+    keyed = _attach_block_size(keyed).withColumn(
+        "_salt",
+        F.when(
+            F.col("_bs") > cap,
+            F.pmod(F.xxhash64("file_id"), F.ceil(F.col("_bs") / cap).cast("int")),
+        ).otherwise(0),
     )
-    big_pairs = _pairs_within(big, ["_bk", "_salt"], channel)
-    big_star = (
-        big.join(big.groupBy("_bk").agg(F.min("file_id").alias("_root")), "_bk")
-        .filter(F.col("file_id") != F.col("_root"))
-        .select(
-            F.least("file_id", "_root").alias("left_id"),
-            F.greatest("file_id", "_root").alias("right_id"),
-        )
-        .withColumn("channel", F.lit(channel))
-    )
-    return small_pairs.unionByName(big_pairs).unionByName(big_star)
+    big_star = _min_star(keyed.filter(F.col("_bs") > cap), "_bk", channel)
+    return _pairs_within(keyed, ["_bk", "_salt"], channel).unionByName(big_star)
 
 
 def content_sha_star(df: DataFrame, channel: str = "exact_content") -> DataFrame:
     """Exact-duplicate channel: link every row to the min row id of its
     content_sha256 group. Linear in block size — hot exact-dup blocks
     (empty files, vendored licenses) never pair-explode."""
-    roots = df.groupBy("content_sha256").agg(F.min("file_id").alias("_root"))
-    return (
-        df.select("content_sha256", "file_id")
-        .join(roots, "content_sha256")
-        .filter(F.col("file_id") != F.col("_root"))
-        .select(
-            F.least("file_id", "_root").alias("left_id"),
-            F.greatest("file_id", "_root").alias("right_id"),
-        )
-        .withColumn("channel", F.lit(channel))
-    )
+    return _min_star(df, "content_sha256", channel)
 
 
 # ---------------------------------------------------------------------------
@@ -274,16 +272,7 @@ def minhash_lsh_pairs(
     banded = _attach_block_size(cached)
 
     small_pairs = _pairs_within(banded.filter(F.col("_bs") <= band_cap), ["_bk"], channel)
-    big = banded.filter(F.col("_bs") > band_cap)
-    big_star = (
-        big.join(big.groupBy("_bk").agg(F.min("file_id").alias("_root")), "_bk")
-        .filter(F.col("file_id") != F.col("_root"))
-        .select(
-            F.least("file_id", "_root").alias("left_id"),
-            F.greatest("file_id", "_root").alias("right_id"),
-        )
-        .withColumn("channel", F.lit(channel))
-    )
+    big_star = _min_star(banded.filter(F.col("_bs") > band_cap), "_bk", channel)
     out = small_pairs.unionByName(big_star).dropDuplicates(["left_id", "right_id"])
     # expose the persisted dependency so callers can unpersist once
     # their downstream result is materialized (run_pipeline does) —

@@ -316,9 +316,12 @@ def dedup_minhash_lsh(spark, sf):
     through driver pickle before the driver asks for it. The SCALE
     surface is ``blocking.minhash_lsh_pairs``, which stays fully
     distributed; this entry is its self-asserting demo at driver
-    corpus sizes."""
+    corpus sizes. The returned leaf's localCheckpoint blocks are
+    UNREPLICATED executor storage: on a real cluster an executor loss
+    makes the returned frame unrecomputable (the caveat clustering.py
+    documents for its assignment)."""
     d = _t(spark, sf, "documents")
-    from concurrent.futures import ThreadPoolExecutor
+    from pyspark import InheritableThread
 
     from music_dedupe_spark.operators.blocking import minhash_lsh_pairs
 
@@ -365,13 +368,15 @@ def dedup_minhash_lsh(spark, sf):
 
     # the REAL pass: the actual corpus only — canaries never touch it.
     # The canary check is an INDEPENDENT job chain over a ~500-row local
-    # frame: submit it from a second driver thread so its fixed
+    # frame: run it on a second driver thread so its fixed
     # stage-scheduling cost overlaps the real pass instead of being paid
     # serially before it (guide §2.6 — actions are only sequential
     # because the driver calls them sequentially; the two passes share
     # no plan state, and each persists/unpersists only its own caches).
-    # The future's result() below re-raises a canary failure before the
-    # entry can return, so the self-assert contract is unchanged.
+    # The join below re-raises a canary failure before the entry can
+    # return, so the self-assert contract holds. An InheritableThread
+    # inherits the caller's job group and, under pinned-thread mode,
+    # releases its paired JVM thread when it ends.
     # (round 6 measured rejection: a parallelism floor — repartition the
     # one-file scan to 32 before the signature kernel — was tried here
     # and REVERTED: the ~2 s serial kernel it parallelizes is cheaper
@@ -393,8 +398,17 @@ def dedup_minhash_lsh(spark, sf):
     # unpersist in a finally: the recall raise (or a failed collect)
     # must not strand MEMORY_AND_DISK signature caches in a long-lived
     # session — the exact leak the canary branch already guards against
-    pool = ThreadPoolExecutor(max_workers=1)
-    canary_future = pool.submit(_canary_check) if planted else None
+    canary_errors: list[Exception] = []
+
+    def _run_canary() -> None:
+        try:
+            _canary_check()
+        except Exception as e:  # re-raised on the calling thread
+            canary_errors.append(e)
+
+    canary = InheritableThread(_run_canary) if planted else None
+    if canary is not None:
+        canary.start()
     try:
         # canonicalize to NUMERIC (left < right) pair order JVM-side and
         # materialize ONCE with an eager localCheckpoint (round 6; the
@@ -419,8 +433,10 @@ def dedup_minhash_lsh(spark, sf):
             .orderBy("left_doc", "right_doc")
             .localCheckpoint()
         )
-        if canary_future is not None:
-            canary_future.result()  # re-raise a canary-recall failure
+        if canary is not None:
+            canary.join()
+            if canary_errors:
+                raise canary_errors[0]  # a canary-recall failure
         if total_chars <= LSH_ORGANIC_TRUTH_MAX_CHARS:
             # the candidate set is needed driver-side only for this
             # gated recall check — and the gate caps the corpus (and so
@@ -443,9 +459,10 @@ def dedup_minhash_lsh(spark, sf):
                     )
     finally:
         # wait for the canary thread before unpersisting anything: its
-        # error (if any) was surfaced by result() above; on an earlier
-        # raise the shutdown just drains the already-submitted check
-        pool.shutdown(wait=True)
+        # error (if any) was raised above; on an earlier raise this just
+        # drains the already-started check
+        if canary is not None:
+            canary.join()
         for dep in pair_deps + truth_deps:
             dep.unpersist()
     return out

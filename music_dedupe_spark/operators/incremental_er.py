@@ -1,8 +1,7 @@
 """Incremental entity resolution: link NEW files against an already-
-resolved corpus without re-scoring it (EP1 re-scan analog done right —
-the reference re-walks the whole library every scan cycle,
-/root/reference/app/core.py:585-663; at 10^12 rows a full re-run per
-delta is not an option).
+resolved corpus without re-scoring it. The reference re-walks the whole
+library every scan cycle; at 10^12 rows a full re-run per delta is not
+an option.
 
 Candidate generation only pairs ``new × (new ∪ existing)``:
 
@@ -15,13 +14,27 @@ Candidate generation only pairs ``new × (new ∪ existing)``:
   independent of corpus size: blocking keys of the existing side are
   pre-filtered to keys present in the new batch (a broadcast semi-join
   when the batch is small — the common case), so the big side is
-  scanned once and pruned early. The sorted-neighborhood channel is
-  the exception: group heads depend on the global key order, so each
-  delta re-runs the (narrow, two-column) range-sort pass over the full
-  old ∪ new corpus — one O(corpus) narrow shuffle per delta, gated by
-  ``cfg.rungroup_max_rows`` exactly like the batch pipeline; for
-  high-frequency small deltas where LSH recall suffices, raise the
-  gate out of reach (or set the cfg threshold to 0 rows) to skip it.
+  scanned once and pruned early. These three channels are unioned
+  FIRST and pruned to new-touching pairs by ONE pass (two broadcast
+  left joins on the new-id set, one filter); the filter is row-wise,
+  so it commutes with the union and the pair set and channel tags are
+  those of filtering each channel alone. The sorted-neighborhood
+  channel is the exception: group heads depend on the global key
+  order, so each delta re-runs the (narrow, two-column) range-sort pass
+  over the full old ∪ new corpus — one O(corpus) narrow shuffle per
+  delta, gated by ``cfg.rungroup_max_rows`` exactly like the batch
+  pipeline; for high-frequency small deltas where LSH recall suffices,
+  raise the gate out of reach (or set the cfg threshold to 0 rows) to
+  skip it.
+
+Plan shape: the candidate union and the scored pairs are each cut with
+an eager ``localCheckpoint`` — the same cut ``connected_components``
+makes on its input — so scoring, CC and the output joins plan over
+leaves instead of re-planning the whole channel tree at every action.
+The checkpoint blocks are UNREPLICATED executor storage: on a
+real cluster, losing an executor while a returned ``candidate_pairs``
+or ``scored_pairs`` view is still live makes it unrecomputable (the
+caveat ``clustering.py`` documents for its assignment).
 
 Exactness: running ``incremental_link`` over a delta produces the SAME
 clusters as re-running the full pipeline over old ∪ new
@@ -60,6 +73,8 @@ common case exactly.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,20 +82,17 @@ from music_dedupe_spark.operators import blocking, clustering, scoring
 
 
 def _touching_new(pairs: DataFrame, new_feats: DataFrame) -> DataFrame:
-    """Keep only pairs with at least one NEW member (broadcast semi-
-    joins on the small new-batch id set)."""
-    new_ids = new_feats.select("file_id")
-    keep_l = pairs.join(
-        F.broadcast(new_ids.withColumnRenamed("file_id", "left_id")), "left_id", "left_semi"
+    """Keep only pairs with at least one NEW member: two broadcast left
+    joins flag each side against the small new-batch id set, one filter
+    keeps the flagged rows. Row-wise, so it commutes with the channel
+    union and needs no dedup of its own."""
+    new_ids = new_feats.select("file_id", F.lit(True).alias("_new"))
+    return (
+        pairs.join(F.broadcast(new_ids.toDF("left_id", "_l_new")), "left_id", "left")
+        .join(F.broadcast(new_ids.toDF("right_id", "_r_new")), "right_id", "left")
+        .filter(F.col("_l_new") | F.col("_r_new"))
+        .select(*pairs.columns)
     )
-    keep_r = pairs.join(
-        F.broadcast(new_ids.withColumnRenamed("file_id", "right_id")), "right_id", "left_semi"
-    )
-    out = keep_l.unionByName(keep_r).dropDuplicates(["left_id", "right_id"])
-    deps = getattr(pairs, "_mds_persisted", [])
-    if deps:
-        out._mds_persisted = deps
-    return out
 
 
 def _delta_exact_key_pairs(
@@ -89,12 +101,12 @@ def _delta_exact_key_pairs(
     """exact-key channel restricted to blocks that contain >= 1 new
     file: the existing side is pruned by a broadcast semi-join on the
     new batch's (typically small) key set, then the SAME cap-and-star
-    machinery as the batch channel bounds hot blocks, and only
-    new-touching pairs survive (old×old connectivity lives in the
-    existing assignment)."""
+    machinery as the batch channel bounds hot blocks. Touched blocks
+    still yield old×old pairs; the caller's one ``_touching_new`` pass
+    drops them."""
     new_keys = new_feats.select("norm_name").distinct()
     pruned = all_feats.join(F.broadcast(new_keys), "norm_name", "left_semi")
-    return _touching_new(blocking.exact_key_pairs(pruned, cap=cap), new_feats)
+    return blocking.exact_key_pairs(pruned, cap=cap)
 
 
 def _delta_content_star(new_feats: DataFrame, all_feats: DataFrame) -> DataFrame:
@@ -102,19 +114,8 @@ def _delta_content_star(new_feats: DataFrame, all_feats: DataFrame) -> DataFrame
     its sha group across the WHOLE corpus (one groupBy on the pruned
     sha set, linear)."""
     new_shas = new_feats.select("content_sha256").distinct()
-    grp = (
-        all_feats.select("content_sha256", "file_id")
-        .join(F.broadcast(new_shas), "content_sha256", "left_semi")
-    )
-    roots = grp.groupBy("content_sha256").agg(F.min("file_id").alias("_root"))
-    return (
-        grp.join(roots, "content_sha256")
-        .filter(F.col("file_id") != F.col("_root"))
-        .select(
-            F.least("file_id", "_root").alias("left_id"),
-            F.greatest("file_id", "_root").alias("right_id"),
-        )
-        .withColumn("channel", F.lit("exact_content"))
+    return blocking.content_sha_star(
+        all_feats.join(F.broadcast(new_shas), "content_sha256", "left_semi")
     )
 
 
@@ -196,10 +197,10 @@ def incremental_link(
     pv_new = pair_view(new_feats)
     pv_all = pair_view(all_feats)
 
-    channels = [
-        # old→root links inside a touched sha group duplicate closure the
-        # existing assignment already has — keep the delta pure
-        _touching_new(_delta_content_star(pv_new, pv_all), pv_new),
+    # channels whose old×old pairs are closed in the existing assignment:
+    # unioned first, then pruned to new-touching pairs by ONE filter
+    prunable = [
+        _delta_content_star(pv_new, pv_all),
         _delta_exact_key_pairs(pv_new, pv_all, cap=cfg.block_cap),
     ]
 
@@ -217,11 +218,13 @@ def incremental_link(
     from music_dedupe_spark.pipeline import rungroup_channel
 
     rg_pairs = rungroup_channel(pv_all, cfg, all_feats.count())
+    channels = []
     if rg_pairs is not None:
         channels.append(_not_same_entity(rg_pairs, existing_assignment))
 
     sig_store = existing_signatures
     delta_store = None
+    lsh_deps = []
     metrics: dict[str, int] = {}
     if cfg.use_lsh:
         # hash ONLY content the store does not cover (the delta, plus any
@@ -311,17 +314,19 @@ def incremental_link(
             shingle_k=cfg.shingle_k,
             sigs=all_sigs,
         )
-        channels.append(_touching_new(lsh, pv_new))
-    candidate_pairs = blocking.union_channels(*channels)
-    # release operator-persisted subplans (banded LSH signatures) once the
-    # candidate stage is materialized — same discipline as run_pipeline
-    _cand_deps = getattr(candidate_pairs, "_mds_persisted", [])
-    candidate_pairs = candidate_pairs.persist()
-    candidate_pairs.count()
-    for _d in _cand_deps:
-        _d.unpersist()
+        lsh_deps = lsh._mds_persisted
+        prunable.append(lsh)
+    # eager lineage cuts at both stage boundaries (module docstring)
+    candidate_pairs = blocking.union_channels(
+        _touching_new(reduce(DataFrame.unionByName, prunable), pv_new), *channels
+    ).localCheckpoint()
+    # the banded LSH signatures are dead once the candidates are cut
+    for d in lsh_deps:
+        d.unpersist()
 
-    scored = scoring.score_candidates(candidate_pairs, pv_all, cfg.scoring).persist()
+    scored = scoring.score_candidates(
+        candidate_pairs, pv_all, cfg.scoring
+    ).localCheckpoint()
     delta_edges = scoring.matched_pairs(scored)
 
     # fold the existing resolution in via clustering.fold_incremental
@@ -358,7 +363,7 @@ def incremental_link(
         ) + [delta_store]
     return {
         "features": new_feats.drop("_is_new"),
-        # lazy public-id views over the internally persisted fid pairs
+        # lazy public-id views over the checkpointed fid pairs
         # (same output contract as run_pipeline)
         "candidate_pairs": public_pairs(candidate_pairs, all_feats),
         "scored_pairs": public_pairs(scored, all_feats),

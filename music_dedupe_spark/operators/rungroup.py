@@ -202,6 +202,9 @@ def sorted_run_groups(
             break
         carries = new_carries
         result.unpersist()
+    # the final round's collect materialized every partition of the
+    # persisted result, so the range-partitioned input is dead
+    parted.unpersist()
 
     rows = result.filter(~F.col("_sum"))
     out = rows.select(

@@ -1,10 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-The reference tunes SQLite PRAGMAs and a 4-thread pool
-(/root/reference/app/core.py:42,144-146); our equivalents are explicit
-shuffle-partition control, AQE (runtime coalescing + skew-join splitting),
-and Arrow batching for the vectorized-UDF path — the three knobs the
-north rule requires to be explicit.
+The reference tunes SQLite PRAGMAs and a 4-thread pool; our equivalents
+are explicit shuffle-partition control, AQE (runtime coalescing +
+skew-join splitting), and Arrow batching for the vectorized-UDF path —
+the three knobs the north rule requires to be explicit. Cores and driver
+memory default to what the host has.
 """
 
 from __future__ import annotations
@@ -14,7 +14,30 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: driver heap as a share of host RAM, and its ceiling. local mode runs
+#: the executors inside the driver JVM; Python workers, the page cache
+#: and off-heap buffers need the rest.
+DRIVER_MEM_FRACTION = 0.4
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return os.environ["SPARK_GRAFT_CPUS"]
+    if hasattr(os, "sched_getaffinity"):
+        return str(len(os.sched_getaffinity(0)))
+    return str(os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else DRIVER_MEM_FRACTION of physical
+    RAM capped at DRIVER_MEM_CAP_MB: a fixed large heap lets the JVM
+    grow past what a small host has until the kernel kills it."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(DRIVER_MEM_CAP_MB, int(total_mb * DRIVER_MEM_FRACTION))}m"
 
 
 def get_spark(
@@ -29,7 +52,7 @@ def get_spark(
     cluster and ``master`` comes from the submit command; locally we run
     ``local[N]``. All settings below are cluster-safe.
     """
-    cpus = str(cpus or DEFAULT_CPUS)
+    cpus = str(cpus or default_cpus())
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.appName(app_name)
@@ -70,7 +93,7 @@ def get_spark(
         # deterministic timestamps vs the DuckDB oracle
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -6,8 +6,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from music_dedupe_spark.fixtures import generate_corpus, write_corpus
+from music_dedupe_spark.operators import blocking
+from music_dedupe_spark.operators import incremental_er as ie
 from music_dedupe_spark.operators.incremental_er import incremental_link
-from music_dedupe_spark.pipeline import PipelineConfig, pairwise_f1, run_pipeline
+from music_dedupe_spark.pipeline import (
+    PipelineConfig,
+    ingest,
+    pair_view,
+    pairwise_f1,
+    public_pairs,
+    run_pipeline,
+    rungroup_channel,
+)
 
 
 @pytest.fixture(scope="module")
@@ -17,24 +27,29 @@ def corpus_dirs(tmp_path_factory):
     return str(d)
 
 
-def _labels(clusters):
-    return {r["member_id"]: r["entity_id"] for r in clusters.collect()}
-
-
-def test_incremental_matches_full_rerun(spark, corpus_dirs):
+@pytest.fixture(scope="module")
+def fold(spark, corpus_dirs):
+    """(all files, new files, base run over the old half, its fold)."""
     files = spark.read.parquet(f"{corpus_dirs}/files.parquet")
     # split deterministically: ~half the files arrive later
     is_new = F.crc32("path") % 2 == 1
-    old_files = files.filter(~is_new)
     new_files = files.filter(is_new)
-
-    base = run_pipeline(old_files, PipelineConfig())
+    base = run_pipeline(files.filter(~is_new), PipelineConfig())
     inc = incremental_link(
         new_files,
         base["features"],
         base["clusters"],
         existing_signatures=base["minhash_sig_store"],
     )
+    return files, new_files, base, inc
+
+
+def _labels(clusters):
+    return {r["member_id"]: r["entity_id"] for r in clusters.collect()}
+
+
+def test_incremental_matches_full_rerun(spark, corpus_dirs, fold):
+    files, _, base, inc = fold
     full = run_pipeline(files, PipelineConfig())
 
     # the signature store must cover every old content: the delta hashes
@@ -79,22 +94,13 @@ def test_incremental_matches_full_rerun(spark, corpus_dirs):
     assert m["f1"] >= 0.99, m
 
 
-def test_incremental_candidates_touch_new_or_regroup(spark, corpus_dirs):
+def test_incremental_candidates_touch_new_or_regroup(fold):
     """The capped/LSH/content channels must only emit new-touching pairs;
     the sorted-neighborhood channel is the ONE channel allowed to emit
     old×old pairs (group heads shift with the global order), and only
     across two different existing entities (same-entity pairs are
     union-redundant and must be pruned)."""
-    files = spark.read.parquet(f"{corpus_dirs}/files.parquet")
-    is_new = F.crc32("path") % 2 == 1
-    base = run_pipeline(files.filter(~is_new), PipelineConfig())
-    inc = incremental_link(
-        files.filter(is_new),
-        base["features"],
-        base["clusters"],
-        existing_signatures=base["minhash_sig_store"],
-    )
-
+    _, _, base, inc = fold
     new_ids = {
         r["file_id"] for r in inc["features"].select("file_id").collect()
     }
@@ -112,6 +118,52 @@ def test_incremental_candidates_touch_new_or_regroup(spark, corpus_dirs):
         assert entity.get(r["left_id"]) != entity.get(r["right_id"]), (
             "old×old same-entity pair not pruned"
         )
+
+
+def _touching_new_per_channel(pairs, new_feats):
+    """The per-channel new-touching filter the fold replaced with one
+    pass over the union: keep_l ∪ keep_r by broadcast semi-joins."""
+    new_ids = new_feats.select("file_id")
+    keep_l = pairs.join(
+        F.broadcast(new_ids.withColumnRenamed("file_id", "left_id")), "left_id", "left_semi"
+    )
+    keep_r = pairs.join(
+        F.broadcast(new_ids.withColumnRenamed("file_id", "right_id")), "right_id", "left_semi"
+    )
+    return keep_l.unionByName(keep_r).dropDuplicates(["left_id", "right_id"])
+
+
+def test_fold_candidates_match_per_channel_filter(fold):
+    """Filtering the union of the prunable channels once gives the same
+    pairs AND channel tags as filtering each channel on its own."""
+    _, new_files, base, inc = fold
+    cfg = PipelineConfig()
+    new_feats = ingest(new_files)
+    all_feats = base["features"].unionByName(new_feats)
+    pv_new, pv_all = pair_view(new_feats), pair_view(all_feats)
+    lsh = blocking.minhash_lsh_pairs(
+        pv_all, num_perm=cfg.minhash_num_perm, bands=cfg.minhash_bands,
+        shingle_k=cfg.shingle_k,
+    )
+    oracle = blocking.union_channels(
+        _touching_new_per_channel(ie._delta_content_star(pv_new, pv_all), pv_new),
+        _touching_new_per_channel(
+            ie._delta_exact_key_pairs(pv_new, pv_all, cap=cfg.block_cap), pv_new
+        ),
+        ie._not_same_entity(
+            rungroup_channel(pv_all, cfg, all_feats.count()), base["clusters"]
+        ),
+        _touching_new_per_channel(lsh, pv_new),
+    )
+
+    def rows(df):
+        return {tuple(r) for r in df.select("left_id", "right_id", "channel").collect()}
+
+    want = rows(public_pairs(oracle, all_feats))
+    for d in lsh._mds_persisted:
+        d.unpersist()
+    assert {c for _, _, c in want} == set(blocking.CHANNEL_PRIORITY)
+    assert rows(inc["candidate_pairs"]) == want
 
 
 # strings chosen so inserting C between H and D re-heads the run-group

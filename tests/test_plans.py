@@ -178,3 +178,41 @@ def test_exchanges_parses_trailing_block(monkeypatch):
     assert len(exs) == 1
     assert exs[0]["cols"] == {"a", "b"}
     assert "hashpartitioning" in exs[0]["args"]
+
+
+def test_fold_scores_over_checkpointed_candidates(spark):
+    """The fold cuts lineage at the candidate and scoring boundaries:
+    its scored pairs plan over a localCheckpoint leaf, so no Exchange of
+    candidate generation (blocking keys, sha groups, LSH bands, run
+    groups, the channel union) is re-planned behind them."""
+    from music_dedupe_spark.operators.incremental_er import incremental_link
+    from music_dedupe_spark.pipeline import PipelineConfig, run_pipeline
+    from music_dedupe_spark.plans import explain_str
+    from music_dedupe_spark.plans.checks import exchanges
+    import re
+
+    def mkfiles(rows):
+        return spark.createDataFrame(
+            rows, "repo string, path string, commit string, lang string, content string"
+        )
+
+    base = run_pipeline(
+        mkfiles([("r", f"src/alpha_{i}.py", "c0", "py", f"base content {i}") for i in range(4)])
+    )
+    inc = incremental_link(
+        mkfiles([("r", "src/alpha_1.py", "c1", "py", "base content 1 x")]),
+        base["features"],
+        base["clusters"],
+        existing_signatures=base["minhash_sig_store"],
+    )
+    scored = inc["scored_pairs"]
+    # the score columns come straight off a checkpointed RDD scan
+    assert re.search(
+        r"Scan ExistingRDD.*\nOutput \[\d+\]: \[[^\]]*is_dup[^\]]*\]\n"
+        r"Arguments: .* at localCheckpoint",
+        explain_str(scored),
+    ), explain_str(scored)[:3000]
+    candidate_cols = {"_bk", "_bs", "_salt", "_root", "content_sha256", "norm_name",
+                      "group_id", "_key", "_head", "sig", "channel"}
+    leaked = [e for e in exchanges(scored) if e["cols"] & candidate_cols]
+    assert not leaked, leaked

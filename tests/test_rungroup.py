@@ -89,3 +89,15 @@ def test_group_pairs_shape(spark):
     assert len(pairs) == 10  # C(5,2) all-pairs for a small group
     for r in pairs:
         assert r["left_id"] < r["right_id"]
+
+
+def test_sorted_run_groups_releases_partitioned_input(spark):
+    """Only the returned result stays cached: the range-partitioned
+    input and every superseded round are released before returning."""
+    jsc = spark.sparkContext._jsc
+    rows = [(f"samekey{i % 3}", f"id{i:04d}") for i in range(200)]
+    df = spark.createDataFrame(rows, "norm_name string, file_id string")
+    before = jsc.getPersistentRDDs().size()
+    out = sorted_run_groups(df, num_partitions=4)
+    out.count()
+    assert jsc.getPersistentRDDs().size() <= before + 1

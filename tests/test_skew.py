@@ -63,6 +63,51 @@ def test_hot_blocks_not_merged(skew_result, spark):
     assert biggest <= 10, f"a hot block collapsed into one cluster of {biggest}"
 
 
+def test_exact_key_one_join_matches_split_branches(spark, skew_corpus, tmp_path):
+    """The salted single self-join (salt 0 below the cap) emits exactly
+    the pairs and channel of the formulation that paired small blocks,
+    salted big sub-blocks and the big-block star in three branches."""
+    from music_dedupe_spark.fixtures import write_corpus
+    from music_dedupe_spark.operators.blocking import _pairs_within, exact_key_pairs
+    from music_dedupe_spark.pipeline import ingest
+
+    write_corpus(skew_corpus, str(tmp_path))
+    feats = ingest(spark.read.parquet(f"{tmp_path}/files.parquet"))
+    cap = PipelineConfig().block_cap
+
+    keyed = feats.select(F.col("norm_name").alias("_bk"), "file_id").filter(
+        F.col("norm_name").isNotNull() & (F.col("norm_name") != "")
+    )
+    sizes = keyed.groupBy("_bk").agg(F.count("*").alias("_bs")).filter(F.col("_bs") > 1)
+    keyed = keyed.join(sizes, "_bk")
+    small = keyed.filter(F.col("_bs") <= cap)
+    big = keyed.filter(F.col("_bs") > cap).withColumn(
+        "_salt", F.pmod(F.xxhash64("file_id"), F.ceil(F.col("_bs") / cap).cast("int"))
+    )
+    roots = big.groupBy("_bk").agg(F.min("file_id").alias("_root"))
+    big_star = (
+        big.join(roots, "_bk")
+        .filter(F.col("file_id") != F.col("_root"))
+        .select(
+            F.least("file_id", "_root").alias("left_id"),
+            F.greatest("file_id", "_root").alias("right_id"),
+        )
+        .withColumn("channel", F.lit("exact_key"))
+    )
+    oracle = (
+        _pairs_within(small, ["_bk"], "exact_key")
+        .unionByName(_pairs_within(big, ["_bk", "_salt"], "exact_key"))
+        .unionByName(big_star)
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("left_id", "right_id", "channel").collect())
+
+    # both regimes are exercised: the hot blocks exceed the cap
+    assert big.select("_bk").distinct().count() >= 3 and small.count() > 0
+    assert rows(exact_key_pairs(feats, cap=cap)) == rows(oracle)
+
+
 def test_block_size_count_no_window_no_straggler(spark):
     """VERDICT r1 'What's wrong #3': block-size counting must be a
     groupBy+join (AQE-splittable), never a window (one unsplittable task
